@@ -2,7 +2,7 @@
 
 A from-scratch re-expression of the capability surface of poorting/nf2pq
 (a Rust NetFlow/IPFIX → Parquet/ClickHouse streaming ETL collector; the
-reference checkout at /root/reference is a moved-repo stub, see SURVEY.md §0)
+reference checkout is a moved-repo stub, see SURVEY.md §0)
 as an idiomatic Spark engine:
 
 - batch analytics over Parquet via the DataFrame/Catalyst path,
@@ -18,4 +18,12 @@ Packages:
     streaming/  Structured Streaming jobs and sinks
 """
 
+from ._zipcache import install as _install_zipcache
+
 __version__ = "0.1.0"
+
+# A Python worker imports this package when it unpickles its first engine
+# UDF, so from then on a reused worker stops re-reading pyspark.zip on
+# every task (see _zipcache). No conf, env var or worker module is
+# involved: it holds for a driver-provided session too.
+_install_zipcache()

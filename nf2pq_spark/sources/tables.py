@@ -55,20 +55,18 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 
 
 #: path -> (file signature, inferred StructType). Pure METADATA memo:
-#: schema inference reads parquet footers on the driver (~92 ms/table
-#: measured, r13) and every query invocation was re-paying it per
-#: load_table call — inside bench.py's timed region. The signature
-#: (mtime_ns, size; per-file RECURSIVELY for directories — a partition
-#: subdirectory's rewrites must invalidate too, r13 advice) changes
-#: whenever the file set changes, and keying by PATH with the signature
-#: in the value means a new signature REPLACES the stale entry instead
-#: of accumulating beside it (r13 verdict item 3: bounded at one entry
-#: per live path). This caches NO data and NO results: each action
+#: schema inference reads parquet footers on the driver (~92 ms/table)
+#: and would otherwise be re-paid on every load_table call. The
+#: signature (mtime_ns, size; per file, RECURSIVELY for directories, so
+#: a partition subdirectory's rewrite invalidates too) changes whenever
+#: the file set changes, and keying by PATH with the signature in the
+#: value means a new signature REPLACES the stale entry: at most one
+#: entry per live path. This caches NO data and NO results: each action
 #: still scans parquet. Schema inference is pinned to the engine's conf
 #: regime — read_parquet_cached_schema applies ensure_session_conf
 #: itself (memoized per session, so it is not a per-call py4j tax), so
 #: a public caller on an unconfigured session cannot poison the memo
-#: with a different-conf inference (r13 advice).
+#: with a different-conf inference.
 #:
 #: Object-store note (100 TB design point): the directory signature is
 #: one recursive listing per load_table call — cheap on a local fs,
@@ -79,15 +77,20 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 _SCHEMA_CACHE: dict[str, tuple] = {}
 
 
+def _raise(err: OSError):
+    raise err
+
+
 def _path_signature(path: str):
     """Cheap change-detection signature for a parquet file or directory
     (recursive — covers partition subdirectories); None (→ no caching)
-    when the path cannot be stat'ed."""
+    when the path or any directory under it cannot be stat'ed or listed:
+    a partial signature would vouch for a file set it never saw."""
     try:
         st = os.stat(path)
         if _stat.S_ISDIR(st.st_mode):
             sig = []
-            for root, _dirs, files in os.walk(path):
+            for root, _dirs, files in os.walk(path, onerror=_raise):
                 rel = os.path.relpath(root, path)
                 for f in files:
                     fst = os.stat(os.path.join(root, f))
@@ -119,10 +122,10 @@ def read_parquet_cached_schema(spark: SparkSession, path: str) -> DataFrame:
 #: attribute): a DataFrame is an immutable LOGICAL PLAN — reusing the
 #: object across queries caches no data (every action still scans
 #: parquet); it only skips re-building the identical relation through
-#: py4j (~20 ms/call measured after the schema memo). r13's module-level
-#: WeakKeyDictionary never actually evicted (the cached DataFrames hold
-#: strong refs back to their session key, pinning the entry — r13
-#: advice); an instance attribute dies with the session wrapper by
+#: py4j (~20 ms/call measured after the schema memo). It must not be a
+#: module-level WeakKeyDictionary keyed by session: the cached DataFrames
+#: hold strong refs back to their session, so such an entry never
+#: evicts; an instance attribute dies with the session wrapper by
 #: construction. Keyed path -> (signature, frame): a rewritten fixture
 #: replaces its stale entry instead of accumulating beside it.
 _FRAME_ATTR = "_nf2pq_frame_memo"

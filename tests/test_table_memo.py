@@ -62,8 +62,47 @@ def test_ensure_session_conf_memoized_and_idempotent(spark):
     assert spark.conf.get(
         "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold") == \
         RUNTIME_CONF["spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"]
-    # second call is a no-op (the memo short-circuits before any py4j)
+    # second call re-applies nothing (the memo short-circuits after one
+    # sentinel read)
     assert ensure_session_conf(spark) is spark
+
+
+def test_ensure_session_conf_repins_a_reset_time_zone(spark):
+    """The marker is trusted only while the sentinel time zone still holds
+    its pin; a reset re-applies the whole set, not just the sentinel."""
+    tz = "spark.sql.session.timeZone"
+    shj = "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"
+    ensure_session_conf(spark)
+    try:
+        spark.conf.set(tz, "Pacific/Kiritimati")
+        spark.conf.unset(shj)
+        assert ensure_session_conf(spark) is spark
+        assert spark.conf.get(tz) == "UTC"
+        assert spark.conf.get(shj) == RUNTIME_CONF[shj]
+    finally:
+        spark.conf.set(tz, RUNTIME_CONF[tz])
+        spark.conf.set(shj, RUNTIME_CONF[shj])
+
+
+def test_unlistable_subdirectory_voids_the_signature(tmp_path, monkeypatch):
+    """A listing error anywhere under a table directory yields no signature
+    (→ no caching), not a signature that silently skips the subtree. The
+    failure is injected through os.scandir: running as root, chmod does
+    not stop a listing."""
+    path = tmp_path / "events.parquet"
+    (path / "part=0").mkdir(parents=True)
+    (path / "part=0" / "a.parquet").write_bytes(b"x")
+    (path / "b.parquet").write_bytes(b"y")
+    assert tables._path_signature(str(path)) is not None
+    real_scandir = os.scandir
+
+    def scandir(p="."):
+        if os.path.basename(os.fspath(p)) == "part=0":
+            raise PermissionError(13, "Permission denied", os.fspath(p))
+        return real_scandir(p)
+
+    monkeypatch.setattr(os, "scandir", scandir)
+    assert tables._path_signature(str(path)) is None
 
 
 def test_frame_memo_lives_on_the_session(spark, tmp_path):

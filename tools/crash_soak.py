@@ -45,6 +45,7 @@ from __future__ import annotations
 
 import os
 import random
+import select
 import signal
 import socket
 import subprocess
@@ -61,12 +62,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def _child_bridge(out_dir: str, port: int, rotate_s: float) -> None:
     """Run the UDP bridge until SIGTERM (graceful: finalizes open files).
     SIGKILL — the soak's crash injection — leaves the in-flight .tmp
-    behind, which must stay invisible to every reader."""
+    behind, which must stay invisible to every reader. Prints ``BOUND``
+    once the socket is bound: the parent sends nothing before that line."""
     from nf2pq_spark.sources.udp_bridge import UdpCaptureBridge
 
     bridge = UdpCaptureBridge("127.0.0.1", port, out_dir,
                               rotate_seconds=rotate_s)
     bridge.start()
+    print("BOUND", flush=True)
     stop = []
     signal.signal(signal.SIGTERM, lambda *_: stop.append(1))
     while not stop:
@@ -123,7 +126,7 @@ def _child_compact(rollup_dir: str) -> None:
 # orchestration
 # --------------------------------------------------------------------------
 
-def _spawn(args: list[str]) -> subprocess.Popen:
+def _spawn(args: list[str], stdout=subprocess.DEVNULL) -> subprocess.Popen:
     """Child in its OWN process group: pyspark's JVM is a child of the
     python process, and a bare SIGKILL to python would orphan a JVM that
     keeps running the job — the 'killed' drain would finish its writes
@@ -131,7 +134,7 @@ def _spawn(args: list[str]) -> subprocess.Popen:
     return subprocess.Popen(
         [sys.executable, os.path.abspath(__file__), *args],
         start_new_session=True,
-        stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+        stdout=stdout, stderr=subprocess.DEVNULL)
 
 
 def _kill9(p: subprocess.Popen) -> None:
@@ -140,6 +143,28 @@ def _kill9(p: subprocess.Popen) -> None:
     except ProcessLookupError:
         pass
     p.wait()
+    if p.stdout is not None:
+        p.stdout.close()
+
+
+def _spawn_bridge(cap: str, port: int, timeout: float = 60.0
+                  ) -> subprocess.Popen:
+    """Start a bridge child and return once it reports its socket bound.
+    Datagrams sent before the bind are dropped by the kernel, so sending
+    after a fixed sleep loses traffic whenever child start-up is slow."""
+    p = _spawn(["--bridge", cap, str(port), "0.25"], stdout=subprocess.PIPE)
+    deadline = time.monotonic() + timeout
+    while True:
+        left = deadline - time.monotonic()
+        ready = select.select([p.stdout], [], [], max(left, 0))[0]
+        line = p.stdout.readline() if ready else b""
+        if line.strip() == b"BOUND":
+            return p
+        if not ready or not line:
+            _kill9(p)
+            raise RuntimeError(
+                f"bridge child did not bind within {timeout:.0f}s "
+                f"(exit status {p.returncode})")
 
 
 def _run_with_random_kill(args: list[str], kill_after: float) -> bool:
@@ -214,8 +239,7 @@ def soak(workdir: str, cycles: int = 3, datagrams: int = 1500,
     per_cycle = datagrams // cycles
     sent = 0
     for c in range(cycles):
-        bridge = _spawn(["--bridge", cap, str(port), "0.25"])
-        time.sleep(0.5)  # let it bind
+        bridge = _spawn_bridge(cap, port)
         _send_flows(port, sent, per_cycle, base_ms, rate_per_s)
         sent += per_cycle
         if c < cycles - 1:
@@ -226,6 +250,7 @@ def soak(workdir: str, cycles: int = 3, datagrams: int = 1500,
             time.sleep(0.4)
             os.killpg(os.getpgid(bridge.pid), signal.SIGTERM)  # graceful
             bridge.wait(timeout=10)
+            bridge.stdout.close()
 
     # -- phase B: collector drain churn ------------------------------------
     # the bridge nests files under <exporter-ip>/ and Spark's binaryFile

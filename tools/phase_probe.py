@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Dev-only per-phase wall-time probe for one query (r14 attribution).
+"""Dev-only per-phase wall-time probe for one query.
 
 Times named sub-stages of a hot query in a fresh session so optimization
 work targets the measured phase, not a guess. Each probe is warmup +
@@ -76,16 +76,22 @@ def probe_s6(spark, sf_dir):
             F.count(F.lit(1)).alias("n"))))
 
 
-def main():
-    which = sys.argv[1]
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else os.environ.get(
+PROBES = {"g3": probe_g3, "l25": probe_l25, "s6": probe_s6}
+
+
+def main(argv=None):
+    argv = sys.argv[1:] if argv is None else argv
+    if not 1 <= len(argv) <= 2 or argv[0] not in PROBES:
+        raise SystemExit(__doc__)
+    which = argv[0]
+    sf_dir = argv[1] if len(argv) > 1 else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("phase-probe", cpus=os.environ.get(
         "SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
     load_table(spark, sf_dir, "lineitem").count()  # warm listings/JIT
     print(f"probe {which} @ {sf_dir}")
-    {"g3": probe_g3, "l25": probe_l25, "s6": probe_s6}[which](spark, sf_dir)
+    PROBES[which](spark, sf_dir)
 
 
 if __name__ == "__main__":
