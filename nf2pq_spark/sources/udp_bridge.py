@@ -6,7 +6,7 @@ Spark has no UDP source, so the nf2pq-equivalent deployment is:
         spark.readStream.format("binaryFile") ──▶ decode (sources.ipfix)
 
 The bridge is deliberately tiny and stateless: receive datagrams, frame
-them (length-prefixed capture format, ``sources.ipfix.write_capture_file``),
+them (length-prefixed capture format, ``sources.capture``),
 rotate the output file on a time interval — exactly the reference daemon's
 buffer-and-rotate front end, minus decoding, which belongs in Spark where
 it scales horizontally. One bridge process per listener address; files land
@@ -22,11 +22,10 @@ from __future__ import annotations
 
 import os
 import socket
-import struct
 import threading
 import time
 
-from .ipfix import _CAPTURE_MAGIC
+from .capture import _CAPTURE_MAGIC, write_frame
 
 
 class UdpCaptureBridge:
@@ -54,10 +53,8 @@ class UdpCaptureBridge:
         entry = self._files.get(exporter_ip)
         # a retained entry whose fh is CLOSED (the write-error path
         # finalized a non-expired capture, close succeeded, rename
-        # failed) is due-for-finalize regardless of its age: returning
-        # the closed handle made the next write raise ValueError, which
-        # the loop's OSError catch missed — silently killing the
-        # receiver thread (r12 review)
+        # failed) is due-for-finalize regardless of its age: a write to
+        # the closed handle would raise ValueError in the receiver loop
         if (entry is not None and now - entry[1] < self.rotate_seconds
                 and not entry[0].closed):
             return entry[0]
@@ -68,9 +65,7 @@ class UdpCaptureBridge:
                 # rotation failed: _finalize kept the entry (see its
                 # ordering note), so the commit of the SAME capture is
                 # retried at the next due scan — only THIS datagram is
-                # dropped. Propagating instead would reach the write
-                # handler, which abandons the handle and would orphan
-                # the buffered capture permanently (r11 advice).
+                # dropped, never the buffered capture.
                 self.write_errors += 1
                 self.last_error = ex
                 return None
@@ -85,7 +80,7 @@ class UdpCaptureBridge:
         # clamped monotone per bridge (an NTP step-back must not produce a
         # name that sorts before — or equals, silently replacing — an
         # already-committed file), and the pid suffix keeps port-sharded
-        # bridges writing one out_dir collision-free (r10 review).
+        # bridges writing one out_dir collision-free.
         ms = max(int(time.time() * 1000), self._last_name_ms + 1)
         self._last_name_ms = ms
         tmp = os.path.join(d, f".cap_{ms:015d}_{os.getpid():07d}.bin.tmp")
@@ -101,11 +96,10 @@ class UdpCaptureBridge:
         final = os.path.join(os.path.dirname(tmp),
                              os.path.basename(tmp)[1:-4])  # drop dot + .tmp
         os.rename(tmp, final)
-        # removed only AFTER the rename: popping first meant a transient
-        # close/rename failure permanently orphaned the .tmp — its
-        # buffered datagrams never committed, never retried (r11 advice).
-        # On failure the entry stays (expired, so every later scan
-        # retries it; file close is idempotent on the retry path).
+        # removed only AFTER the rename, so a transient close/rename
+        # failure never orphans the .tmp and its buffered datagrams: the
+        # entry stays (expired, so every later scan retries it; file
+        # close is idempotent on the retry path).
         del self._files[exporter_ip]
 
     def _flush_expired(self, now: float) -> None:
@@ -118,9 +112,8 @@ class UdpCaptureBridge:
                     self._finalize(exporter)
                 except OSError as ex:
                     # the failed exporter's entry is kept for retry; the
-                    # OTHER expired exporters must still flush this scan
-                    # (r11 advice: a mid-iteration raise skipped them
-                    # AND the deadline recompute below)
+                    # OTHER expired exporters must still flush this scan,
+                    # and the deadline below must still be recomputed
                     self.write_errors += 1
                     self.last_error = ex
         # recompute the earliest deadline over the files still open, so
@@ -156,9 +149,9 @@ class UdpCaptureBridge:
             # captures hidden as .tmp; this deadline check is one float
             # compare per datagram, scanning only when a rotation is due.
             # Rotation failure belongs to the exporter being FLUSHED, not
-            # the one whose datagram we're holding (r10 advice) —
-            # _flush_expired swallows it per-exporter and RETAINS the
-            # failed handle so the same capture retries (r11 advice).
+            # the one whose datagram we're holding — _flush_expired
+            # swallows it per-exporter and RETAINS the failed handle so
+            # the same capture retries.
             if now >= self._next_flush:
                 self._flush_expired(now)
             try:
@@ -166,8 +159,7 @@ class UdpCaptureBridge:
                 if fh is None:
                     continue  # this exporter's own rotation failed;
                               # datagram dropped, commit retries later
-                fh.write(struct.pack(">I", len(data)))
-                fh.write(data)
+                write_frame(fh, data)
                 self.datagrams_received += 1
             except (OSError, ValueError) as ex:
                 # ValueError = write-to-closed-file: _sink_for's closed
@@ -175,14 +167,13 @@ class UdpCaptureBridge:
                 # closed-handle path must degrade like any fs error,
                 # never kill the receiver thread
                 # disk full / fs error: DROP the datagram (UDP gives it no
-                # delivery promise) but never the receiver thread — before
-                # this catch the thread died silently and the bridge
-                # looked healthy while losing everything (r10 review).
-                # COMMIT what this exporter already buffered instead of
-                # abandoning the handle (r11: the abandoned .tmp lost
-                # every earlier frame too) — a torn tail frame is the
-                # truncated-tail state the capture reader already drops;
-                # if the commit itself fails the entry stays for retry.
+                # delivery promise) but never the receiver thread, which
+                # would otherwise die silently while the bridge looks
+                # healthy. COMMIT what this exporter already buffered
+                # rather than abandon its earlier frames — a torn tail
+                # frame is the truncated-tail state the capture reader
+                # already drops; if the commit itself fails the entry
+                # stays for retry.
                 self.write_errors += 1
                 self.last_error = ex
                 if src_ip in self._files:
@@ -190,8 +181,8 @@ class UdpCaptureBridge:
                         self._finalize(src_ip)
                     except OSError as ex2:
                         # two distinct failures, two counted errors —
-                        # every other finalize-failure path increments
-                        # the counter a monitor alerts on (r12 review)
+                        # every finalize-failure path increments the
+                        # counter a monitor alerts on
                         self.write_errors += 1
                         self.last_error = ex2
 

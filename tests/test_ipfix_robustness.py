@@ -18,7 +18,8 @@ import pandas as pd
 
 from nf2pq_spark.sources.ipfix import (FLOW_SCHEMA, _decode_ipfix,
                                        _decode_templated_vec, _decode_v9,
-                                       _iter_template_sets, _VecAccumulator)
+                                       _iter_template_sets,
+                                       _v10_record_count, _VecAccumulator)
 
 _COLS = [f.name for f in FLOW_SCHEMA.fields]
 
@@ -445,11 +446,22 @@ def test_scalar_vectorized_differential_property():
             m = _v9_msg(_v9_tset(300, fields), dset_bytes)
         else:
             m = _ipfix_msg(_tset(300, fields), dset_bytes)
+            # the declared length ends the message (RFC 7011 §3.1) even
+            # when more bytes follow: both paths must stop there alike
+            declared = data.draw(st.one_of(st.just(len(m)),
+                                           st.integers(0, len(m))))
+            m = m[:2] + struct.pack(">H", declared) + m[4:]
         rows, got, teq = _both(m)
         assert teq
         assert rows == got
 
     run()
+    # four records, the declared length covering two: the scalar decode
+    # and the header reader's record count see the same two
+    m = _ipfix_msg(_tset(300, _AB), _dset(300, bytes(range(32))))
+    m = m[:2] + struct.pack(">H", len(m) - 16) + m[4:]
+    assert len(_decode_ipfix(m, "e1", {})) == 2
+    assert _v10_record_count(m, "e1", {}) == 2
 
 
 def test_scalar_vectorized_differential_multiset_property():
@@ -1016,6 +1028,37 @@ def test_varlen_overrun_discards_partial_record_not_datagram():
     vec = _vec_rows(msg)
     assert sorted(scalar) == sorted(
         tuple(r) for r in vec.itertuples(index=False))
+
+
+def test_options_varlen_overrun_discards_partial_record():
+    """The options walk follows the flow decoder's varlen rule: an
+    overlong samplerName prefix discards that record and ends its set,
+    instead of reading the next set's bytes as the string (and as the
+    IE 160 boot epoch after it, when the template carries one)."""
+    from nf2pq_spark.sources.ipfix import (_harvest_boot_rows,
+                                           _iter_options_vals,
+                                           _parse_options_templates,
+                                           encode_ipfix_options)
+
+    for extra in ([(160, 8)], []):  # samplerName mid-record, then last
+        recs = [{149: 1, 34: 100, 35: 1, 84: "ab", 160: 1_700_000_000_000},
+                {149: 1, 34: 100, 35: 1, 84: "cd", 160: 1_600_000_000_000}]
+        msg = bytearray(encode_ipfix_options(recs,
+                                             extra_option_fields=extra))
+        # second record's samplerName prefix: data-set header, the first
+        # record, then domain (4), interval (4) and algorithm (1)
+        rec_len = 4 + 4 + 1 + 1 + 2 + sum(ln for _, ln in extra)
+        name_at = 16 + struct.unpack_from(">H", msg, 18)[0] + 4 + rec_len + 9
+        assert msg[name_at] == 2
+        msg[name_at] = 40
+        msg += _dset(999, bytes(range(40)))
+        struct.pack_into(">H", msg, 2, len(msg))
+        msg = bytes(msg)
+        cache: dict = {}
+        _parse_options_templates(msg, "e1", cache)
+        assert [v[84] for v in _iter_options_vals(msg, "e1", cache)] == ["ab"]
+        assert _harvest_boot_rows(msg, "e1", cache) == (
+            [(1, 1_700_000_000_000)] if extra else [])
 
 
 def test_v9_options_template_never_enters_v10_opt_view():

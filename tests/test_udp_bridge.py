@@ -256,3 +256,22 @@ def test_sink_for_never_returns_closed_handle(tmp_path, monkeypatch):
     names = sorted(_os.listdir(tmp_path / "10.0.0.9"))
     committed = [n for n in names if n.startswith("cap_")]
     assert len(committed) == 1  # the failed capture committed on retry
+
+
+def test_bridge_import_does_not_load_the_decoder():
+    """The bridge frames datagrams with the stdlib-only capture module, so
+    a (re)started bridge binds without importing numpy/pandas or the
+    decoder. Checks the module list, not a time, so host load can't
+    change the outcome."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import sys, nf2pq_spark.sources.udp_bridge; "
+         "print(sorted(m for m in ('pandas', 'nf2pq_spark.sources.ipfix')"
+         " if m in sys.modules))"],
+        cwd=root, capture_output=True, text=True, timeout=120, check=True)
+    assert out.stdout.strip() == "[]"
